@@ -153,3 +153,118 @@ def test_workspace_store_service_lifecycle(spark, tmp_path):
     small.add("trim :name")
     store.save(small)
     assert len(store.load("lim").execute().values) == len(small.execute().values)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return (fn's result, the ids
+    of the Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_workspace_requests_run_no_spark_jobs(spark, tmp_path):
+    """The sample is materialized once, when the workspace is created;
+    afterwards a native recipe — parse-as-csv's compile-time sample
+    included — and the response collect fold over the driver-held rows
+    and submit no Spark job."""
+    from wrangler_spark.interactive import Workspace
+
+    path = str(tmp_path / "src.parquet")
+    spark.createDataFrame(
+        [(f"{i},n{i},{i * 1.5}",) for i in range(50)], ["body"]
+    ).coalesce(1).write.parquet(path)
+    ws, created = _jobs_in_group(
+        spark, "ws-create", lambda: Workspace("jobs", spark.read.parquet(path), limit=20)
+    )
+    assert created  # the one materialization job
+
+    def requests():
+        ws.add(
+            "parse-as-csv :body ',' false", "drop :body",
+            "set-type :body_3 double", "uppercase :body_2",
+            "filter-row exp:{ body_3 > 3.0 } true",
+        )
+        return ws.execute()
+
+    resp, jobs = _jobs_in_group(spark, "ws-requests", requests)
+    assert jobs == []
+    assert resp.headers == ["body_1", "body_2", "body_3"]
+    assert sorted(r["body_2"] for r in resp.values) == ["N0", "N1", "N2"]
+
+
+def test_workspace_sample_fixed_over_nondeterministic_source(spark):
+    """Every request sees the rows the workspace was created with, even
+    when re-reading the source would return others. (``F.rand()`` takes
+    its seed when the column is built, so a Python UDF stands in for a
+    source that really differs per read.)"""
+    import random
+
+    from wrangler_spark.interactive import Workspace
+
+    shuffle_key = F.udf(lambda: random.random(), "double").asNondeterministic()
+    df = spark.range(200).orderBy(shuffle_key())
+    ws = Workspace("nondet", df, limit=10)
+    first = ws.add("set-column :twice exp:{ id * 2 }").values
+    assert len(first) == 10
+    assert ws.execute().values == first
+    assert ws.execute().values == first
+
+
+def test_workspace_sample_round_trips_types(spark):
+    """The local sample keeps the source schema exactly (nullability
+    included) and its values, across temporal, decimal, nested,
+    interval and binary types."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from wrangler_spark.interactive import Workspace
+
+    schema = T.StructType([
+        T.StructField("ts", T.TimestampType(), False),
+        T.StructField("dec", T.DecimalType(20, 4), True),
+        T.StructField("arr", T.ArrayType(T.IntegerType(), True), True),
+        T.StructField("m", T.MapType(T.StringType(), T.LongType(), True), True),
+        T.StructField("st", T.StructType([
+            T.StructField("x", T.IntegerType(), False),
+            T.StructField("y", T.StringType(), True),
+        ]), True),
+        T.StructField("dti", T.DayTimeIntervalType(), True),
+        T.StructField("bin", T.BinaryType(), True),
+    ])
+    rows = [
+        (dt.datetime(2024, 1, 2, 3, 4, 5, 123456), Decimal("12345.6789"), [1, None, 3],
+         {"a": 1, "b": None}, (7, "z"), dt.timedelta(days=1, seconds=7384, microseconds=5),
+         bytearray(b"\x00\xff\x10")),
+        (dt.datetime(1999, 12, 31, 23, 59, 59), None, None, None, None, None, None),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    ws = Workspace("types", df)
+    assert ws._sample.schema == df.schema
+    resp = ws.execute()
+    assert resp.types == dict(df.dtypes)
+    assert resp.values == [r.asDict(recursive=True) for r in df.collect()]
+
+
+def test_workspace_pandas_udf_directive_over_local_sample(spark):
+    """A directive compiled to a pandas UDF (mask-shuffle) is not folded
+    into the local relation; it still returns the values the recipe
+    produces on the lazy source."""
+    from wrangler_spark.interactive import Workspace
+
+    df = spark.createDataFrame(
+        [(i, f"Name{i}x", f"A{i}-b") for i in range(6)], ["id", "name", "code"]
+    )
+    recipe = "mask-shuffle :name\nmask-shuffle :code"
+    want = [r.asDict() for r in Pipeline.compile(recipe).apply(df).orderBy("id").collect()]
+    ws = Workspace("udf", df)
+    got = sorted(ws.add(*recipe.splitlines()).values, key=lambda r: r["id"])
+    assert got == want and want[0]["name"] != "Name0x"

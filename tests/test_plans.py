@@ -70,6 +70,7 @@ def test_workspace_plan_surface(spark):
     r = ws.plan()
     assert r.ok, r.warnings                 # the recipe compiles scan-side
     assert r.features["python_evals"] == 0
+    assert r.features["file_scans"] >= 1     # the source-shaped plan
     est = ws.estimate()
     assert est["size_bytes"] > 0            # the magnitude pre-flight
 

@@ -311,7 +311,9 @@ def kmeans_centroids(
     nearest-centroid assignment (narrow) + one hash aggregation computing
     the per-dimension mean (map-side partials; k x dim floats of state).
     At 100 TB this is the standard pattern: only the k x dim centroid
-    table ever leaves the executors.
+    table ever leaves the executors. Construction is EAGER: the call runs
+    Spark jobs (one collect for the first-k init unless ``init`` is
+    given, then one per Lloyd round) and returns a driver-local relation.
 
     Determinism for cross-engine parity: init = first k vectors by id,
     assignment cosine rounded to 6dp with ties to the lower centroid id,
@@ -434,7 +436,9 @@ def kmeans_converge(
     L2 centroid shift drops to ``tol`` (or at ``max_iters``, the runaway
     bound). One blind iteration on a real corpus yields near-arbitrary
     clusters; this is the default the cartography compositions
-    (cluster_topics / cluster_summary) train with.
+    (cluster_topics / cluster_summary) train with. Construction is EAGER:
+    the call runs Spark jobs (the init collect plus one collect per
+    round) before it returns.
 
     Scale shape: each round is one kmeans_centroids iteration (broadcast
     assignment + map-side mean partials, the corpus never collected);

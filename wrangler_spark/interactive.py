@@ -2,6 +2,14 @@
 service execute/summary/schema endpoints (``wrangler-service/.../directive/
 DirectivesHandler.java:555-595``, ``AbstractDirectiveHandler.java:103-211``)
 as plain functions: same compiler, applied to a sample, no HTTP.
+
+The sample is materialized ONCE and held in driver memory as a JVM
+``LocalRelation``, like the reference's stored workspace rows
+(``DirectivesHandler.java:571-578``). Requests then plan over
+``LocalTableScan``: Catalyst's ``ConvertToLocalRelation`` folds a native
+recipe at optimize time, so compile-time parse samples and the response
+collect run no Spark jobs, and a nondeterministic source cannot change
+the sample between requests.
 """
 
 from __future__ import annotations
@@ -31,6 +39,15 @@ class ExecutionResponse:
     summary: dict[str, dict[str, float]] = field(default_factory=dict)
 
 
+def _local_sample(df: DataFrame) -> DataFrame:
+    """The rows of ``df`` as a driver-held LocalRelation: one Spark job,
+    built JVM-side (rows never cross into Python or Arrow), with the
+    exact schema, nullability included."""
+    jdf = df._jdf.toDF()  # spark.range() frames wrap a Dataset[Long]
+    jss = df.sparkSession._jsparkSession
+    return DataFrame(jss.createDataFrame(jdf.collectAsList(), jdf.schema()), df.sparkSession)
+
+
 def execute(
     recipe: str | list[str],
     df: DataFrame,
@@ -40,7 +57,13 @@ def execute(
     """Run a recipe over a bounded sample and return values + inferred
     schema (the workspace 'execute' round-trip). The sample bound is
     applied BEFORE the recipe, like the service truncating the workspace
-    sample to ``sampling.limit``."""
+    sample to ``sampling.limit``; the bounded sample is materialized once
+    into driver memory (:func:`_local_sample`) and the recipe runs over
+    those rows, the same path :class:`Workspace` requests take."""
+    return _execute_local(recipe, _local_sample(df.limit(limit)), with_summary)
+
+
+def _execute_local(recipe: str | list[str], sample: DataFrame, with_summary: bool) -> ExecutionResponse:
     from wrangler_spark.datapipe import checkpoint_scope
 
     # every value leaving this function is plain Python (rows, types,
@@ -49,7 +72,6 @@ def execute(
     # session runs storage-flat instead of accumulating dead blocks per
     # execute round-trip (the r7-measured session leak)
     with checkpoint_scope():
-        sample = df.limit(limit)
         pipeline = Pipeline.compile(recipe)
         result = pipeline.transform(sample)
         out = result.df
@@ -79,18 +101,27 @@ class Workspace:
     directives and re-executes against the sample —
     ``DirectivesHandler.java`` workspace endpoints). Plain object, no
     HTTP: hold a bounded sample, build the recipe incrementally, then
-    export the final recipe for the production pipeline."""
+    export the final recipe for the production pipeline.
+
+    The sample is materialized once, here (the reference's separate
+    "create workspace" call), and held in driver memory like the
+    service's stored sample rows: add/execute/schema requests then run
+    no Spark job for a native recipe (``summary`` runs its one aggregate)
+    and always see the same rows. :meth:`plan` and :meth:`estimate`
+    audit the lazy source-shaped plan instead, the one the recipe will
+    have at scale."""
 
     def __init__(self, name: str, df: DataFrame, limit: int = 100):
         self.name = name
-        self._sample = df.limit(limit)
+        self._source = df.limit(limit)
+        self._sample = _local_sample(self._source)
         self.directives: list[str] = []
 
     def add(self, *directive_lines: str) -> "ExecutionResponse":
         """Append directive(s); compile-check them against the sample
         before accepting (a bad directive is rejected atomically)."""
         candidate = self.directives + [ln for ln in directive_lines if ln.strip()]
-        resp = execute(candidate, self._sample, limit=2**31 - 1)
+        resp = _execute_local(candidate, self._sample, with_summary=False)
         self.directives = candidate
         return resp
 
@@ -103,7 +134,7 @@ class Workspace:
         return dropped
 
     def execute(self, with_summary: bool = False) -> "ExecutionResponse":
-        return execute(self.directives, self._sample, limit=2**31 - 1, with_summary=with_summary)
+        return _execute_local(self.directives, self._sample, with_summary)
 
     def schema(self) -> list[tuple[str, str]]:
         return schema(self.directives, self._sample)
@@ -121,7 +152,7 @@ class Workspace:
         Lazy — nothing executes."""
         from wrangler_spark.plans import audit
 
-        return audit(Pipeline.compile(self.recipe()).apply(self._sample))
+        return audit(Pipeline.compile(self.recipe()).apply(self._source))
 
     def estimate(self):
         """Catalyst's size/row estimate for the accumulated recipe
@@ -131,7 +162,7 @@ class Workspace:
         before anything runs. Lazy — nothing executes."""
         from wrangler_spark.plans import estimate
 
-        return estimate(Pipeline.compile(self.recipe()).apply(self._sample))
+        return estimate(Pipeline.compile(self.recipe()).apply(self._source))
 
     # --- persistence (the reference's wrangler-storage role: named
     # workspaces survive the session; here JSON + parquet on a local or
@@ -139,12 +170,13 @@ class Workspace:
 
     def save(self, root: str) -> str:
         """Persist this workspace under ``root/<name>/``: the directive
-        list + metadata as workspace.json, the bounded sample as parquet
-        (small by construction — it is the design-time sample, not the
-        production input). Returns the workspace directory."""
+        list + metadata as workspace.json, the bounded sample as ONE
+        parquet file (small by construction — it is the design-time
+        sample, not the production input — and one file reloads in the
+        saved row order). Returns the workspace directory."""
         wdir = os.path.join(root, self.name)
         os.makedirs(wdir, exist_ok=True)
-        self._sample.write.mode("overwrite").parquet(os.path.join(wdir, "sample.parquet"))
+        self._sample.coalesce(1).write.mode("overwrite").parquet(os.path.join(wdir, "sample.parquet"))
         meta = {"name": self.name, "directives": self.directives, "version": 1}
         with open(os.path.join(wdir, "workspace.json"), "w", encoding="utf-8") as f:
             json.dump(meta, f, indent=2)
